@@ -1,71 +1,19 @@
-"""Aggregate stage — metrics + per-partition lineage (A4 in SURVEY §2.7).
+"""Aggregate operators: event-time rollups (tumbling/hopping,
+distinct users, merge and gap-fill), counter rates, latency and cube
+summaries, and burn-rate alerts.
 
-The reference logs per-message producer success (producers.go:882-884);
-at batch scale that becomes materialized metrics tables:
-
-- ``_metrics``: per-sink row counts for the run (correctness anchor);
-- ``_lineage``: per input-partition provenance (run_id, stage,
-  partition_id, rows) via ``spark_partition_id()`` — zero-shuffle
-  (partial agg per partition is the whole agg).
+The pipeline's run tables (``_metrics`` per-sink row counts and
+``_lineage`` per-input-partition provenance — the reference's
+per-message producer success log, producers.go:882-884, batched into
+tables) are NOT built here: ``plans.pipeline._derive_metrics_lineage``
+is their single producer (one grouped readback of the written output,
+committed driver-side).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def metrics(routed: DataFrame, run_id: str) -> DataFrame:
-    return (
-        routed.groupBy("sink")
-        .agg(F.count("*").alias("rows"))
-        .select(F.lit(run_id).alias("run_id"), "sink", "rows")
-    )
-
-
-def lineage_from_col(
-    df: DataFrame, run_id: str, stage: str, pid_col: str = "src_partition_id"
-) -> DataFrame:
-    """Lineage keyed by a MATERIALIZED partition-id column (stamped at
-    scan time by the single-pass plan) instead of the runtime
-    ``spark_partition_id()`` — so provenance survives the round trip
-    through the written sink tables and maps each output row back to
-    the input split that produced it."""
-    return (
-        df.groupBy(F.col(pid_col).alias("partition_id"))
-        .agg(
-            F.count("*").alias("rows"),
-            F.min("conv_id").alias("min_conv_id"),
-            F.max("conv_id").alias("max_conv_id"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            "partition_id",
-            "rows",
-            "min_conv_id",
-            "max_conv_id",
-        )
-    )
-
-
-def lineage(df: DataFrame, run_id: str, stage: str) -> DataFrame:
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count("*").alias("rows"),
-            F.min("conv_id").alias("min_conv_id"),
-            F.max("conv_id").alias("max_conv_id"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            "partition_id",
-            "rows",
-            "min_conv_id",
-            "max_conv_id",
-        )
-    )
 
 
 def rollup_time_windows(

@@ -8,9 +8,12 @@ shared by every window via the hash-partitioning subset rule) and NO
 cached/persisted intermediates. Parse rejects and unroutable rows are
 ROUTED (reserved ``__reject_*`` sink partitions) instead of forked into
 a second plan branch, then split out of the written output with
-metadata-only directory renames; metrics/lineage/row-count derive from
-cheap column-pruned scans of the written (column-compressed,
-partition-pruned) output rather than extra passes over cached data.
+metadata-only directory renames. The tail after that one heavy job is
+ONE column-pruned grouped readback of the written output (per sink ×
+input partition, config-sized) plus driver-side commits of the derived
+``_metrics``/``_lineage`` rows (``Catalog.write_rows``: a pyarrow file
+and the catalog's normal swap, zero Spark jobs) — never an extra pass
+over cached data.
 
 Why this shape at 100 TB: you cannot cache the working set, so every
 ``persist()`` becomes a second full materialization, and every extra
@@ -45,7 +48,6 @@ from pyspark.sql import functions as F
 
 from ..snapshot import snapshot
 from .. import datagen
-from ..operators import aggregate as agg_op
 from ..operators import enrich as enrich_op
 from ..operators import parse as parse_op
 from ..operators import route as route_op
@@ -324,15 +326,48 @@ def _metrics_rows(cat: Catalog, run_id: str) -> int:
     return sum(r.rows for r in (mine or rows))
 
 
-def _derive_metrics_lineage(
-    spark: SparkSession, cat: Catalog, man: RunManifest, run_id: str
-) -> int:
+METRICS_SCHEMA = "run_id string, sink string, rows bigint"
+LINEAGE_SCHEMA = (
+    "run_id string, stage string, partition_id int, "
+    "rows bigint, min_conv_id string, max_conv_id string"
+)
+
+
+def run_table_rows(per: list, run_id: str) -> tuple[list[tuple], list[tuple]]:
+    """Finalize the grouped readback (one row per sink × input
+    partition) driver-side into the per-sink ``_metrics`` rows and the
+    per-input-partition ``_lineage`` rows."""
+    by_sink: dict[str, int] = {}
+    by_pid: dict[int, list] = {}
+    for r in per:
+        by_sink[r.sink] = by_sink.get(r.sink, 0) + r.rows
+        cur = by_pid.get(r.src_partition_id)
+        if cur is None:
+            by_pid[r.src_partition_id] = [r.rows, r.min_conv_id, r.max_conv_id]
+        else:
+            cur[0] += r.rows
+            cur[1] = min(cur[1], r.min_conv_id)
+            cur[2] = max(cur[2], r.max_conv_id)
+    metrics = [(run_id, s, n) for s, n in sorted(by_sink.items())]
+    lineage = [
+        (run_id, "sequence", pid, n, lo, hi)
+        for pid, (n, lo, hi) in sorted(by_pid.items())
+    ]
+    return metrics, lineage
+
+
+def _derive_metrics_lineage(cat: Catalog, man: RunManifest, run_id: str) -> int:
     """ONE column-pruned readback aggregation of the written output →
     per-sink _metrics + per-input-partition _lineage (≤ #sinks ×
     #input-partitions groups, finalized driver-side — the reference's
     per-message success log, producers.go:882-884, batched into
-    tables). Shared by run() and run_incremental() so the two paths
-    cannot drift; returns the total row count."""
+    tables). The only producer of both tables, shared by run() and
+    run_incremental() (hence the keyed stream) so the paths cannot
+    drift. The readback is the tail's only Spark work: both tables are
+    committed from the rows the driver already holds with
+    ``Catalog.write_rows`` (zero jobs), each under its own run-manifest
+    step so a crash between them resumes with just the missing one.
+    Returns the total row count."""
     per = (
         cat.read("sequenced_events")
         .groupBy("sink", "src_partition_id")
@@ -342,39 +377,12 @@ def _derive_metrics_lineage(
             F.max("conv_id").alias("max_conv_id"),
         )
     ).collect()
+    metrics, lineage = run_table_rows(per, run_id)
     if not man.is_committed("metrics"):
-        by_sink: dict[str, int] = {}
-        for r in per:
-            by_sink[r.sink] = by_sink.get(r.sink, 0) + r.rows
-        cat.write(
-            spark.createDataFrame(
-                [(run_id, s, n) for s, n in sorted(by_sink.items())],
-                "run_id string, sink string, rows bigint",
-            ),
-            "_metrics",
-        )
+        cat.write_rows(metrics, METRICS_SCHEMA, "_metrics")
         man.commit("metrics")
     if not man.is_committed("lineage"):
-        by_pid: dict[int, list] = {}
-        for r in per:
-            cur = by_pid.get(r.src_partition_id)
-            if cur is None:
-                by_pid[r.src_partition_id] = [r.rows, r.min_conv_id, r.max_conv_id]
-            else:
-                cur[0] += r.rows
-                cur[1] = min(cur[1], r.min_conv_id)
-                cur[2] = max(cur[2], r.max_conv_id)
-        cat.write(
-            spark.createDataFrame(
-                [
-                    (run_id, "sequence", pid, n, lo, hi)
-                    for pid, (n, lo, hi) in sorted(by_pid.items())
-                ],
-                "run_id string, stage string, partition_id int, "
-                "rows bigint, min_conv_id string, max_conv_id string",
-            ),
-            "_lineage",
-        )
+        cat.write_rows(lineage, LINEAGE_SCHEMA, "_lineage")
         man.commit("lineage")
     return sum(r.rows for r in per)
 
@@ -389,11 +397,13 @@ def run(
     """Execute + persist all outputs; resumable via the run manifest.
 
     Default (single-pass) execution does exactly ONE heavy job — the
-    fan-out write of every row — then derives rejects (partition-pruned
-    read of the moved reject dirs), per-sink metrics (count over the
-    sink partition column of the written output), per-input-partition
-    lineage (two-column pruned scan) and the row count (sum of metrics,
-    driver-side over ≤ #sinks rows) WITHOUT touching the input again.
+    fan-out write of every row, whose reject partitions become the
+    rejects table by metadata-only moves — then a tail of ONE grouped
+    readback of the written output (sink × input partition). Per-sink
+    metrics, per-input-partition lineage and the row count are
+    finalized driver-side from that readback and committed with
+    ``Catalog.write_rows`` (no Spark job), WITHOUT touching the input
+    again.
     """
     run_id = cfg.run_id or uuid.uuid4().hex[:12]
     cat = Catalog(spark, cfg.out_root, stats_columns=cfg.stats_columns or None)
@@ -432,7 +442,7 @@ def run(
     if man.is_committed("metrics") and man.is_committed("lineage"):
         n_rows = _metrics_rows(cat, run_id)
     else:
-        n_rows = _derive_metrics_lineage(spark, cat, man, run_id)
+        n_rows = _derive_metrics_lineage(cat, man, run_id)
 
     wall = time.time() - t0
     return {
@@ -517,7 +527,7 @@ def run_incremental(
     # src_partition_id values describe the snapshot that produced each
     # row — original run for untouched conversations, the incremental
     # scan for recomputed ones.)
-    n_rows = _derive_metrics_lineage(spark, cat, man, run_id)
+    n_rows = _derive_metrics_lineage(cat, man, run_id)
     cat.drop("_incr_events")
     cat.drop("_incr_rejects")
     wall = time.time() - t0

@@ -41,6 +41,8 @@ arbitrates with the catalog's atomic compare-and-swap.
 
 Iceberg mapping of each method (what the real implementation does):
 - ``write``            → ``df.writeTo(tbl).createOrReplace()``
+- ``write_rows``       → a driver-side overwrite of an Arrow table
+  (pyiceberg ``tbl.overwrite(arrow_table)``) — no Spark job
 - ``commit_fanout_split`` → one ``writeTo(staging).create()`` with sink
   partitioning, then TWO metadata-only operations: move the reserved
   reject partitions into the rejects table (partition-level REPLACE)
@@ -91,6 +93,34 @@ def _commit_empty_schema_file(df: DataFrame, d: str) -> None:
     limit(0) optimizes to an empty relation: a no-scan job. ONE shared
     helper so the three empty-commit sites cannot drift."""
     df.limit(0).write.mode("overwrite").parquet(d)
+
+
+def _stage_rows(rows, schema, d: str):
+    """Write driver-held ``rows`` as ONE parquet file into the staging
+    dir ``d`` with pyarrow — no Spark job. ``schema`` is a DDL string
+    or StructType; values go through Spark's own Python→internal
+    conversion (``StructType.toInternal``, what createDataFrame
+    applies), so a naive datetime lands on the same instant either
+    way. Zero rows still write a readable file with the full schema.
+    Returns (StructType, internal rows) for the caller's metadata."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*internal)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    os.makedirs(d, exist_ok=True)
+    pq.write_table(
+        table, os.path.join(d, f"part-00000-{uuid.uuid4().hex}.parquet")
+    )
+    return schema, internal
 
 
 # --------------------------------------------- predicate / stats pruning
@@ -614,6 +644,14 @@ class _CatalogBase:
     def write(self, df, table, partition_by=None) -> None:
         raise NotImplementedError  # pragma: no cover - abstract
 
+    def write_rows(self, rows, schema, table: str) -> None:
+        """Atomic replace of ``table`` with config-sized rows the driver
+        already holds (run metrics, lineage): one pyarrow parquet file
+        committed through the strategy's normal swap — zero Spark jobs,
+        where ``write(spark.createDataFrame(rows))`` pays a full write
+        job to persist a handful of rows."""
+        raise NotImplementedError  # pragma: no cover - abstract
+
     def _table_file_stats(self, table: str) -> tuple[int, int]:
         raise NotImplementedError  # pragma: no cover - abstract
 
@@ -758,14 +796,17 @@ class _CatalogBase:
         review finding), while a crash during a LATER append keeps the
         committed files and correctly resumes down the append path.
         The session-catalog registration may still need
-        ``register_bucketed`` after a restart."""
+        ``register_bucketed`` after a restart. Data files are matched
+        by the catalog's ``fmt`` — the layout is written in that
+        format, so a hard-coded ``.parquet`` never matched an orc
+        table's files."""
         base = self.path(table + ".bucketed")
         if not os.path.isdir(base):
             return False
         for _root, dirs, files in os.walk(base):
             if "_temporary" in dirs:
                 dirs.remove("_temporary")
-            if any(f.endswith(".parquet") for f in files):
+            if any(f.endswith(f".{self.fmt}") for f in files):
                 return True
         return False
 
@@ -1057,6 +1098,12 @@ class PosixCatalog(_CatalogBase):
             # a partitioned write of an EMPTY DataFrame emits only
             # _SUCCESS — re-commit as an unpartitioned schema file
             _commit_empty_schema_file(df, tmp)
+        self._swap_in(tmp, table)
+
+    def write_rows(self, rows, schema, table: str) -> None:
+        self._sweep_stale(table)
+        tmp = self.path(table) + ".tmp-" + uuid.uuid4().hex[:8]
+        _stage_rows(rows, schema, tmp)
         self._swap_in(tmp, table)
 
     def commit_fanout_split(
@@ -1530,6 +1577,29 @@ class ManifestCatalog(_CatalogBase):
         row = df.agg(*self._stat_aggs(cols)).head()
         return self._stats_from_row(row, cols), row["_stat_rows"]
 
+    def _rows_stats(self, schema, internal: list[tuple]) -> dict | None:
+        """The same [min, max, kind] stats as ``_entry_stats``, computed
+        in Python from driver-held rows in Spark's internal form — the
+        staged file is never re-read. Timestamps stay as internal epoch
+        micros (what ``unix_micros`` returns); a NaN anywhere poisons
+        the bound exactly as Spark's max() does, so nothing is
+        recorded."""
+        cols = self._stat_cols(schema)
+        if not cols:
+            return None
+        idx = {f.name: i for i, f in enumerate(schema.fields)}
+        row = {}
+        for c, kind in cols:
+            dt = schema.fields[idx[c]].dataType
+            vals = [r[idx[c]] for r in internal if r[idx[c]] is not None]
+            if kind != "ts":
+                vals = [dt.fromInternal(v) for v in vals]
+            if any(isinstance(v, float) and v != v for v in vals):
+                vals = [float("nan")]
+            row[f"mn_{c}"] = min(vals, default=None)
+            row[f"mx_{c}"] = max(vals, default=None)
+        return self._stats_from_row(row, cols)
+
     def _leaf_stats(
         self, base: str, leaves: list[str]
     ) -> dict[str, dict | None]:
@@ -1753,6 +1823,15 @@ class ManifestCatalog(_CatalogBase):
             evolved=False,
             partition_by=partition_by,
         )
+
+    def write_rows(self, rows, schema, table: str) -> None:
+        stage = self._new_stage(table)
+        schema, internal = _stage_rows(rows, schema, stage)
+        entry = {"path": stage, "base": None, "rows": len(internal)}
+        stats = self._rows_stats(schema, internal)
+        if stats:
+            entry["stats"] = stats
+        self._commit(table, [entry], evolved=False, partition_by=None)
 
     def append(
         self, df: DataFrame, table: str, merge_schema: bool = False

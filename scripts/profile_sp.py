@@ -55,9 +55,11 @@ def main() -> None:
     ).collect()
     times["readback_agg"] = round(time.time() - t0, 2)
 
+    # the driver-side run-table commits, exactly as run() makes them
     t0 = time.time()
-    cat.write(spark.createDataFrame([("r", "s", 1)], "run_id string, sink string, rows bigint"), "_metrics")
-    cat.write(spark.createDataFrame([("r", "s", 1)], "run_id string, stage string, partition_id bigint"), "_lineage")
+    metrics, lineage = pipeline.run_table_rows(per, "profile")
+    cat.write_rows(metrics, pipeline.METRICS_SCHEMA, "_metrics")
+    cat.write_rows(lineage, pipeline.LINEAGE_SCHEMA, "_lineage")
     times["tiny_writes"] = round(time.time() - t0, 2)
 
     times["TOTAL"] = round(time.time() - t_all, 2)

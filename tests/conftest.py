@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,6 +23,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@contextlib.contextmanager
+def count_jobs(spark):
+    """Collect the ids of every Spark job launched inside the block,
+    via a fresh job group on the status tracker. The listener bus is
+    drained first, so a job that already ran is never missed."""
+    sc = spark.sparkContext
+    gid = "count-jobs-" + uuid.uuid4().hex
+    sc.setJobGroup(gid, gid)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(gid))
 
 
 def read_table(spark, root, tbl):

@@ -75,6 +75,28 @@ def test_bucketed_exists_ignores_uncommitted_temporary(spark, cat, tmp_path):
     assert cat.read_bucketed("crash").count() == 10
 
 
+def test_bucketed_exists_matches_catalog_format(spark, tmp_path):
+    """ADVICE finding: bucketed_exists hard-coded ``.parquet`` while the
+    layout is written in the catalog's ``fmt`` — an orc catalog's
+    committed bucketed table read as absent, so a resumed keyed stream
+    would redo its initial write instead of appending."""
+    import os
+
+    cat = Catalog(spark, str(tmp_path / "orccat"), fmt="orc")
+    base = cat.path("state.bucketed")
+    os.makedirs(os.path.join(base, "_temporary", "0"), exist_ok=True)
+    with open(os.path.join(base, "_temporary", "0", "part-0.orc"), "wb") as f:
+        f.write(b"partial")
+    assert not cat.bucketed_exists("state")
+
+    df = spark.range(0, 10).select(
+        (F.col("id") % 2).cast("string").alias("conv_id"), F.col("id").alias("v")
+    )
+    cat.write_bucketed(df, "state", "conv_id", n_buckets=2)
+    assert cat.bucketed_exists("state")
+    assert cat.read_bucketed("state").count() == 10
+
+
 def test_bucketed_groupby_is_shuffle_free(spark, cat):
     df = spark.range(0, 300).select(
         (F.col("id") % 30).cast("string").alias("conv_id"),

@@ -12,6 +12,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from conftest import count_jobs
 from otel2pv_spark.sources.catalog import Catalog
 
 
@@ -1102,3 +1103,94 @@ class TestManifestStatsPruning:
         assert _lower_pred_value(inexact, "num") is None
         assert _lower_pred_value(exact, "num") == 2.5
 
+
+
+class TestWriteRows:
+    """``write_rows`` commits driver-held, config-sized rows (the
+    pipeline's _metrics/_lineage) as one pyarrow file through each
+    strategy's normal swap — the same table a Spark write of the same
+    rows would commit, with zero Spark jobs."""
+
+    DDL = (
+        "s string, n bigint, i int, d double, b boolean, dt date, "
+        "ts timestamp, dec decimal(10,2), arr array<string>"
+    )
+
+    def _rows(self):
+        import datetime
+        import decimal
+
+        return [
+            ("a", 1, 2, 1.5, True, datetime.date(2024, 1, 2),
+             datetime.datetime(2024, 1, 1, 3, 4, 5, 6),
+             decimal.Decimal("1.25"), ["x", "y"]),
+            (None, None, None, float("nan"), None, None, None, None, None),
+            ("zé", -5, 7, -2.0, False, datetime.date(2023, 5, 6),
+             datetime.datetime(2020, 2, 2), decimal.Decimal("-3.50"), []),
+        ]
+
+    def test_matches_spark_write(self, spark, mkcat):
+        cat = mkcat()
+        cat.write_rows(self._rows(), self.DDL, "t")
+        cat.write(spark.createDataFrame(self._rows(), self.DDL), "ref")
+        got, want = cat.read("t"), cat.read("ref")
+        assert got.schema == want.schema
+        assert sorted(map(repr, got.collect())) == sorted(
+            map(repr, want.collect())
+        )
+
+    def test_zero_rows_commit_readable_full_schema(self, spark, mkcat):
+        cat = mkcat()
+        cat.write_rows([], self.DDL, "t")
+        assert cat.exists("t")
+        df = cat.read("t")
+        assert df.schema == spark.createDataFrame([], self.DDL).schema
+        assert df.count() == 0
+
+    def test_snapshots_see_each_commit(self, spark, mkcat):
+        cat = mkcat(keep_snapshots=2)
+        for tag in "abc":
+            cat.write_rows([(tag, i) for i in range(3)], "tag string, i int", "t")
+        assert cat.snapshots("t") == [1, 2]
+        assert {r.tag for r in cat.read("t").collect()} == {"c"}
+        assert {r.tag for r in cat.read("t", version=1).collect()} == {"a"}
+        assert {r.tag for r in cat.read("t", version=2).collect()} == {"b"}
+        hist = sorted(
+            (r.version, r.is_current, r.n_files)
+            for r in cat.history("t").collect()
+        )
+        assert hist == [(1, False, 1), (2, False, 1), (3, True, 1)]
+
+    def test_count_rows_from_metadata(self, spark, mkcat):
+        cat = mkcat()
+        cat.write_rows([("x", i) for i in range(7)], "tag string, i int", "t")
+        if mkcat.strategy == "manifest":
+            entries = cat._load_manifest("t")["entries"]
+            assert [e["rows"] for e in entries] == [7]
+            with count_jobs(spark) as jobs:
+                assert cat.count_rows("t") == 7
+            assert jobs == []
+        else:
+            assert cat.count_rows("t") == 7
+
+    @pytest.mark.parametrize("stats", [None, ("s", "n", "dt", "ts", "d")])
+    def test_zero_spark_jobs(self, spark, mkcat, tmp_path, stats):
+        """No job on either strategy, also when stats are recorded; the
+        Python-side stats equal the ones a Spark write records for the
+        same rows (the NaN column records none on both paths)."""
+        cat = Catalog(
+            spark, str(tmp_path / "jobs"), strategy=mkcat.strategy,
+            stats_columns=stats,
+        )
+        with count_jobs(spark) as jobs:
+            cat.write_rows(self._rows(), self.DDL, "t")
+            cat.write_rows([], self.DDL, "empty")
+        assert jobs == []
+        # the probe itself sees jobs: a Spark write of the same rows
+        with count_jobs(spark) as spark_jobs:
+            cat.write(spark.createDataFrame(self._rows(), self.DDL), "ref")
+        assert spark_jobs
+        if mkcat.strategy == "manifest" and stats:
+            got = cat._load_manifest("t")["entries"][0]["stats"]
+            assert got == cat._load_manifest("ref")["entries"][0]["stats"]
+            assert set(got) == {"s", "n", "dt", "ts"}
